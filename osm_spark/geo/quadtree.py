@@ -15,14 +15,15 @@ prefixes).
 Scale shape — NO iterative rescans of the point set:
 
 - ONE point-level aggregation at z_max builds the finest counts;
-  every coarser level is a parent-sum roll-up of the level below
-  (cell-sized frames, 4-to-1 shrink per level — the tile_pyramid
-  kernel).
-- The split/leaf decision walks DOWN through cell-sized joins: a
-  level-z cell is ELIGIBLE iff its parent split (eligible AND over
-  cap); eligible cells at or under cap — or at z_max — are leaves.
-  Every join is cell-keyed and map-side-combinable; points are never
-  touched again.
+  ONE more aggregate over those cells builds every coarser level at
+  once (tiles.rollup_levels — the tile_pyramid kernel: the per-cell
+  table is exploded once per level, never the points).
+- The split/leaf decision is ONE cell-keyed join of the levels
+  against their over-cap cells: a level-z cell is ELIGIBLE iff its
+  parent split (eligible AND over cap), and since counts only grow
+  toward the root that is iff z == z_min or its parent is over cap;
+  eligible cells at or under cap — or at z_max — are leaves.  Points
+  are never touched again.
 - Leaf-set invariant (pytest + oracle-pinned): leaves tile the
   occupied space exactly — every point lies in exactly one leaf, so
   sum(leaf n) == |points|.
@@ -32,6 +33,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from osm_spark.geo import tiles
 
 
 def adaptive_bins(
@@ -48,41 +51,33 @@ def adaptive_bins(
     occupied cell whose ancestors (down to z_min) all exceeded
     ``cap`` and which itself is at or under cap — or at z_max, where
     recursion stops regardless."""
-    counts = {
-        z_max: pts.groupBy(
-            F.col(x_col).alias("x"), F.col(y_col).alias("y")
-        ).agg(F.count(F.lit(1)).cast("long").alias("n"))
-    }
-    for z in range(z_max - 1, z_min - 1, -1):
-        counts[z] = (
-            counts[z + 1]
-            .groupBy(
-                F.shiftright("x", 1).alias("x"),
-                F.shiftright("y", 1).alias("y"),
-            )
-            .agg(F.sum("n").cast("long").alias("n"))
+    finest = pts.groupBy(
+        F.col(x_col).alias("x"), F.col(y_col).alias("y")
+    ).agg(F.count(F.lit(1)).cast("long").alias("n"))
+    levels = tiles.rollup_levels(
+        finest, z_max, z_min, F.sum("n").cast("long").alias("n"),
+        x="x", y="y", zoom="z",
+    )
+    # n never grows toward the root, so a cell whose parent is over cap
+    # has only over-cap ancestors: it is eligible without walking them
+    split = levels.where(F.col("n") > cap).select(
+        (F.col("z") + 1).alias("cz"), F.col("x").alias("px"),
+        F.col("y").alias("py"),
+    )
+    return (
+        levels.join(
+            split,
+            (F.col("z") == F.col("cz"))
+            & (F.shiftright("x", 1) == F.col("px"))
+            & (F.shiftright("y", 1) == F.col("py")),
+            "left",
         )
-
-    leaves = None
-    elig = counts[z_min]
-    for z in range(z_min, z_max + 1):
-        is_leaf = (F.col("n") <= cap) | F.lit(z == z_max)
-        leaf_z = elig.where(is_leaf).select(
-            F.lit(z).cast("long").alias("z"), "x", "y", "n"
+        .where(
+            ((F.col("z") == z_min) | F.col("px").isNotNull())
+            & ((F.col("n") <= cap) | (F.col("z") == z_max))
         )
-        leaves = leaf_z if leaves is None else leaves.unionByName(leaf_z)
-        if z < z_max:
-            split = elig.where(F.col("n") > cap).select(
-                F.col("x").alias("px"), F.col("y").alias("py")
-            )
-            nxt = counts[z + 1]
-            elig = nxt.join(
-                split,
-                (F.shiftright(nxt["x"], 1) == F.col("px"))
-                & (F.shiftright(nxt["y"], 1) == F.col("py")),
-                "semi",
-            )
-    return leaves
+        .select(F.col("z").cast("long").alias("z"), "x", "y", "n")
+    )
 
 
 def adaptive_bins_sql(

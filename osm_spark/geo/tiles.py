@@ -23,11 +23,10 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 PI = math.pi
-MAX_ZOOM = 18
 
 
 def _col(c) -> Column:
@@ -91,17 +90,6 @@ def tile_bound_south(y, z: int) -> Column:
     return _merc_lat((_col(y).cast("double") + F.lit(1.0)) / F.lit(n))
 
 
-def tile_bounds(x, y, z: int) -> Column:
-    """struct<minlat,maxlat,minlon,maxlon> — matches NewBoundsFromTile
-    (reference bounds.go:18-34)."""
-    return F.struct(
-        tile_bound_south(y, z).alias("minlat"),
-        tile_bound_north(y, z).alias("maxlat"),
-        tile_bound_west(x, z).alias("minlon"),
-        tile_bound_east(x, z).alias("maxlon"),
-    )
-
-
 def contains(lat, lon, minlat, maxlat, minlon, maxlon) -> Column:
     """Inclusive bbox containment — reference bounds.go:38-48."""
     return (
@@ -133,6 +121,35 @@ def range_max(x, z_from: int, z_to: int) -> Column:
         d = z_to - z_from
         return F.shiftleft(_col(x) + 1, d) - 1
     return F.shiftright(_col(x), z_from - z_to)
+
+
+def rollup_levels(
+    df: DataFrame,
+    z_max: int,
+    z_min: int,
+    *aggs: Column,
+    x: str = "tile_x",
+    y: str = "tile_y",
+    zoom: str = "zoom",
+    keys: tuple[str, ...] = (),
+) -> DataFrame:
+    """Every zoom z_max..z_min of a per-tile table from one aggregate.
+
+    ``df`` holds one row per (``x``, ``y``, ``keys``) tile at z_max.
+    Each row is exploded once per shift d = 0..z_max-z_min and grouped
+    on (x >> d, y >> d, zoom = z_max - d, keys): one shuffle for all
+    levels, and the fan-out is levels x tiles, never levels x points.
+    ``aggs`` must compose up the hierarchy (sum, max, min)."""
+    return (
+        df.select("*", F.explode(F.sequence(F.lit(0), F.lit(z_max - z_min))).alias("_rollup_d"))
+        .groupBy(
+            F.expr(f"shiftright({x}, _rollup_d)").alias(x),
+            F.expr(f"shiftright({y}, _rollup_d)").alias(y),
+            (F.lit(z_max) - F.col("_rollup_d")).alias(zoom),
+            *keys,
+        )
+        .agg(*aggs)
+    )
 
 
 def _spread_bits(v: Column) -> Column:

@@ -104,7 +104,6 @@ def tile_counts(spark: SparkSession, sf_dir: str, z: int = 12) -> DataFrame:
         )
         .groupBy("tile_x", "tile_y")
         .agg(F.count("*").alias("n_pages"))
-        .withColumn("zoom", F.lit(z))
     )
 
 
@@ -114,29 +113,15 @@ def tile_pyramid_counts(
     """Counts per tile for every zoom z_min..z_max.
 
     Strategy for scale: compute the z_max assignment ONCE (one narrow
-    pass over pages + one shuffle), then roll up parents zoom-by-zoom
-    with shift math on the already-tiny per-tile table — never re-scans
+    pass over pages + one shuffle), then build every coarser level in
+    one aggregate over the already-tiny per-tile table
+    (:func:`tiles.rollup_levels`) — two shuffles in all, never re-scans
     pages per zoom, never explodes pages x zooms.
     """
-    base = tile_counts(spark, sf_dir, z_max)
-    levels = [base]
-    cur = base
-    for z in range(z_max - 1, z_min - 1, -1):
-        cur = (
-            cur.select(
-                tiles.parent_x("tile_x").alias("tile_x"),
-                tiles.parent_y("tile_y").alias("tile_y"),
-                "n_pages",
-            )
-            .groupBy("tile_x", "tile_y")
-            .agg(F.sum("n_pages").alias("n_pages"))
-            .withColumn("zoom", F.lit(z))
-        )
-        levels.append(cur)
-    out = levels[0]
-    for lv in levels[1:]:
-        out = out.unionByName(lv)
-    return out
+    return tiles.rollup_levels(
+        tile_counts(spark, sf_dir, z_max), z_max, z_min,
+        F.sum("n_pages").alias("n_pages"),
+    ).select("tile_x", "tile_y", "n_pages", "zoom")
 
 
 def captures(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -111,7 +111,7 @@ def q_tile_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     maptile.At semantics (SURVEY §1.5); one shuffle, map-side combine.
     """
-    return pages.tile_counts(spark, sf_dir, _Z).drop("zoom")
+    return pages.tile_counts(spark, sf_dir, _Z)
 
 
 def _pyramid_oracle(z_max: int, z_min: int) -> str:
@@ -133,10 +133,7 @@ def _pyramid_oracle(z_max: int, z_min: int) -> str:
 def q_tile_pyramid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zoom pyramid z4..z10 via parent-shift rollup (tile.Range math);
     pages are scanned once, rollups run on the per-tile table only."""
-    df = pages.tile_pyramid_counts(spark, sf_dir, z_max=10, z_min=4)
-    return df.select(
-        "tile_x", "tile_y", F.col("n_pages").cast("long").alias("n_pages"), "zoom"
-    )
+    return pages.tile_pyramid_counts(spark, sf_dir, z_max=10, z_min=4)
 
 
 _BOUNDS9 = tiles.tile_bound_sql("x", "y", 9)
@@ -6709,12 +6706,8 @@ def q_phrase_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "tile_quantiles",
     f"""
-    WITH base AS (
-      SELECT {{x}} AS x, {{y}} AS y, count(*) AS n
-      FROM documents GROUP BY 1, 2),
-    pyr AS (
-      {{pyr}}),
-    h AS (SELECT zoom, n, count(*) AS cnt FROM pyr GROUP BY 1, 2),
+    WITH pyr AS ({_pyramid_oracle(10, 4)}),
+    h AS (SELECT zoom, n_pages AS n, count(*) AS cnt FROM pyr GROUP BY 1, 2),
     c AS (
       SELECT zoom, n, cnt,
              sum(cnt) OVER (PARTITION BY zoom ORDER BY n
@@ -6728,16 +6721,7 @@ def q_phrase_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM c CROSS JOIN q
     WHERE c.cum * 100 >= q.q * c.total
     GROUP BY 1, 2
-    """.format(
-        x=tiles.tile_x_sql(pages.GEO_LON_SQL, 10),
-        y=tiles.tile_y_sql(pages.GEO_LAT_SQL, 10),
-        pyr=" UNION ALL ".join(
-            f"SELECT x >> {10 - z} AS tx, y >> {10 - z} AS ty, "
-            f"CAST(sum(n) AS BIGINT) AS n, {z} AS zoom "
-            f"FROM base GROUP BY 1, 2"
-            for z in range(10, 3, -1)
-        ),
-    ),
+    """,
 )
 def q_tile_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spatial-density distribution statistics — the dataset-card view
@@ -8809,13 +8793,13 @@ def q_hll_pyramid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HLL register pyramid (the sketch-cube pattern — Druid/
     DataSketches-style pre-aggregated rollup): distinct-content
     registers build once per z6 tile, then roll to z5 and z4 by
-    REGISTER-WISE MAX under the tile child->parent map (tx DIV 2) —
+    REGISTER-WISE MAX under the tile child->parent map (tx >> d) —
     merge without touching the raw data, the property that lets a
     10^12-row scan materialize every zoom level of a distinct-count
-    dashboard from the finest level's sketches.  Each rollup level is
-    one |tiles|x64-row groupBy, corpus-independent.  Same
-    string-op rho as hll_registers (no float log2 boundary); the
-    oracle replays all three levels."""
+    dashboard from the finest level's sketches.  All levels come from
+    one |tiles|x64x3-row rollup aggregate (tiles.rollup_levels),
+    corpus-independent.  Same string-op rho as hll_registers (no float
+    log2 boundary); the oracle replays all three levels."""
     docs = _t_spread(spark, sf_dir, "documents")
     from osm_spark.text.sketch import _hex15_to_long
 
@@ -8834,24 +8818,10 @@ def q_hll_pyramid(spark: SparkSession, sf_dir: str) -> DataFrame:
         "tx", "ty", "bucket",
         F.when(pos == 0, F.lit(55)).otherwise(pos).alias("rho"),
     )
-    l6 = rho.groupBy("tx", "ty", "bucket").agg(
-        F.max("rho").cast("long").alias("rho")
-    )
-    def up(lvl: DataFrame) -> DataFrame:
-        return (
-            lvl.groupBy(
-                F.expr("tx DIV 2").alias("tx"),
-                F.expr("ty DIV 2").alias("ty"),
-                F.col("bucket"),
-            )
-            .agg(F.max("rho").cast("long").alias("rho"))
-        )
-    l5 = up(l6)
-    l4 = up(l5)
-    out = (
-        l6.select(F.lit(6).alias("zoom"), "tx", "ty", "bucket", "rho")
-        .unionAll(l5.select(F.lit(5).alias("zoom"), "tx", "ty", "bucket", "rho"))
-        .unionAll(l4.select(F.lit(4).alias("zoom"), "tx", "ty", "bucket", "rho"))
+    l6 = rho.groupBy("tx", "ty", "bucket").agg(F.max("rho").alias("rho"))
+    out = tiles.rollup_levels(
+        l6, 6, 4, F.max("rho").cast("long").alias("rho"),
+        x="tx", y="ty", keys=("bucket",),
     )
     return out.select(
         "zoom",
@@ -10633,7 +10603,7 @@ def _phrase_sql() -> str:
         parts.append(f"""
     SELECT {pi} AS phrase_id, doc_id,
            CAST(u.i - 1 AS BIGINT) AS pos
-    FROM t, UNNEST(range(1, len(w) - {len(terms) - 1})) AS u(i)
+    FROM t, UNNEST(range(1, len(w) - {len(terms)} + 2)) AS u(i)
     WHERE {conds}""")
     return (
         "WITH t AS (SELECT doc_id, string_split(text, ' ') AS w"

@@ -25,8 +25,9 @@ is the q-gram prefix-filtered join (AllPairs/PPJoin family):
 
 Cost: one gram-frequency aggregation (gram-vocabulary-sized,
 broadcast), one per-string rank window, one equi-join on prefix
-grams, one verify projection.  No similarity join in the plan ever
-compares strings that share zero rare grams.
+grams (short strings join on deletion variants in the same join, see
+edit_distance_join), one verify projection.  No similarity join in
+the plan ever compares strings that share zero rare grams.
 """
 
 from __future__ import annotations
@@ -48,6 +49,19 @@ def qgrams(s, q: int = 2) -> Column:
     )
 
 
+def _deletion_variants(d: int) -> Column:
+    """Distinct strings left after deleting <= d characters of column
+    ``s`` (one per position bitmask: only for short strings)."""
+    return F.expr(
+        f"""array_distinct(transform(
+          filter(sequence(0, shiftleft(1, length(s)) - 1),
+                 m -> bit_count(m) <= {d}),
+          m -> array_join(transform(sequence(0, length(s)),
+                 i -> IF(i = 0 OR (shiftright(m, i - 1) & 1) = 1, '',
+                         substr(s, i, 1))), '')))"""
+    )
+
+
 def edit_distance_join(
     strs: DataFrame,
     id_col: str = "sid",
@@ -57,9 +71,12 @@ def edit_distance_join(
 ) -> DataFrame:
     """-> (a, b, dist): all id pairs (a < b) with
     levenshtein(s_a, s_b) <= d.  Exact recall via the prefix filter
-    (module header); requires length >= q * (d + 1) for the >= 1
-    shared-prefix-gram guarantee — shorter strings join on their full
-    gram set (prefix length covers it)."""
+    (module header) whenever one string of the pair has length
+    >= q * (d + 1): its q-gram windows outnumber what d edits can
+    destroy.  Two shorter strings may share no gram at all ('ab' and
+    'cd' at q=2, d=2), so those pair on their deletion neighbourhoods
+    instead (FastSS): strings within distance d share a string reached
+    by <= d deletions from each side."""
     base = strs.select(
         F.col(id_col).alias("sid"), F.col(str_col).alias("s")
     )
@@ -75,6 +92,13 @@ def edit_distance_join(
         )
         .where(F.col("rk") <= d * q + 1)
         .select("sid", "s", "g")
+        .unionByName(
+            # "\0"-marked: a deletion variant only meets another one
+            base.where(F.length("s") < q * (d + 1)).select(
+                "sid", "s",
+                F.explode(_deletion_variants(d)).alias("v"),
+            ).select("sid", "s", F.concat(F.lit("\0"), "v").alias("g"))
+        )
     )
     a = ranked.select(
         F.col("sid").alias("a"), F.col("s").alias("sa"), "g"

@@ -27,7 +27,11 @@ def test_editjoin_exact_recall_vs_bruteforce(spark):
 
     strs = [
         (i, f"item-{i // 4:03d}-{i % 4}") for i in range(60)
-    ] + [(100, "utterly-different-string"), (101, "item-999-9")]
+    ] + [(100, "utterly-different-string"), (101, "item-999-9")] + [
+        # shorter than q*(d+1): pairs like 'ab'/'cd' share no q-gram
+        (200, "ab"), (201, "cd"), (202, "a"), (203, ""), (204, "abcde"),
+        (205, "xyzw"), (206, "wzyx"), (207, "aaaaa"), (208, "bbb"),
+    ]
     want = {
         (a, b, lev(sa, sb))
         for (a, sa), (b, sb) in itertools.combinations(strs, 2)

@@ -130,3 +130,33 @@ def test_phrase_match_positions_and_adjacency(spark):
         for r in phrase_match(post, "b c").collect()
     }
     assert got2 == {(1, 1), (1, 4), (2, 3)}
+
+
+def test_phrase_search_oracle_finds_phrase_ending_document(spark):
+    # a phrase that ends its document starts at the last valid
+    # position; the DuckDB oracle and the index join must both find it
+    import duckdb
+    import pandas as pd
+
+    import osm_spark.queries as Q
+    from osm_spark.text.index import phrase_match, positional_postings
+
+    rows = [
+        (1, "slow hash batch"),
+        (2, "x y slow hash batch"),
+        (3, "slow hash batch z"),
+        (4, "slow hash"),
+    ]
+    con = duckdb.connect()
+    documents = pd.DataFrame(rows, columns=["doc_id", "text"])
+    con.register("documents", documents)
+    want = set(con.execute(Q.ORACLE_SQL["phrase_search"]).fetchall())
+    assert {(d, p) for ph, d, p in want if ph == 0} == {(1, 0), (2, 2), (3, 0)}
+
+    post = positional_postings(_docs(spark, rows), "doc_id", "text")
+    got = {
+        (pi, r["doc"], r["pos"])
+        for pi, ph in enumerate(Q._PHRASES)
+        for r in phrase_match(post, ph).collect()
+    }
+    assert got == want

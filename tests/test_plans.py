@@ -234,6 +234,24 @@ def test_tile_smooth_explodes_tiles_not_pages(spark):
     assert "HashAggregate" in plan[gen:]
 
 
+def test_tile_pyramid_one_explode_two_shuffles(spark):
+    # every level from ONE explode over the per-tile table: the base
+    # count aggregate sits below the explode, and the plan has the base
+    # shuffle plus one rollup shuffle, not one per zoom level
+    plan = _plan(spark, "tile_pyramid")
+    assert _count(plan, "Generate explode") == 1
+    gen = plan.index("Generate explode")
+    assert "HashAggregate" in plan[gen:]
+    assert _count(plan, "Exchange hashpartitioning") <= 2
+    from osm_spark.pipeline import pages
+
+    df = pages.tile_pyramid_counts(spark, SF, z_max=10, z_min=4)
+    assert df.dtypes == [
+        ("tile_x", "bigint"), ("tile_y", "bigint"),
+        ("n_pages", "bigint"), ("zoom", "int"),
+    ]
+
+
 def test_mvt_encode_two_shuffles_one_kernel(spark):
     # per-way collect (one way_id exchange) -> per-tile encode kernel
     # (one tile exchange into FlatMapGroupsInPandas); nothing else

@@ -114,3 +114,48 @@ def test_containment_inclusive_boundary(spark):
         tiles.contains("lat", "lon", F.lit(b.s), F.lit(b.n), F.lit(b.w), F.lit(b.e)).alias("c")
     ).collect()
     assert [r.c for r in got] == [True, True, False]
+
+
+def _fold_levels(rows, z_max, z_min, agg):
+    """Reference: roll (x, y, key) -> v up one zoom at a time."""
+    out, cur = set(), dict(rows)
+    for z in range(z_max, z_min - 1, -1):
+        out |= {(x, y, k, v, z) for (x, y, k), v in cur.items()}
+        nxt = {}
+        for (x, y, k), v in cur.items():
+            p = (x >> 1, y >> 1, k)
+            nxt[p] = agg(nxt[p], v) if p in nxt else v
+        cur = nxt
+    return out
+
+
+@pytest.mark.parametrize(
+    "z_max,z_min,keyed",
+    [(5, 0, False), (9, 4, False), (6, 6, False), (6, 4, True)],
+    ids=["to_root", "z_min_above_0", "one_level", "keyed_max"],
+)
+def test_rollup_levels_matches_level_fold(spark, z_max, z_min, keyed):
+    import random
+
+    rng = random.Random(z_max * 100 + z_min)
+    n = 1 << z_max
+    # edge tiles of both axes, then random interior ones
+    cells = [(0, 0), (n - 1, n - 1), (0, n - 1), (n - 1, 0)]
+    cells += [(rng.randrange(n), rng.randrange(n)) for _ in range(60)]
+    keys = range(3) if keyed else [0]
+    rows = {(x, y, k): rng.randrange(1, 50) for x, y in cells for k in keys}
+    df = spark.createDataFrame(
+        [(x, y, k, v) for (x, y, k), v in rows.items()],
+        "tile_x long, tile_y long, bucket long, v long",
+    )
+    agg, fn = (max, F.max) if keyed else (lambda a, b: a + b, F.sum)
+    got = tiles.rollup_levels(
+        df if keyed else df.drop("bucket"), z_max, z_min,
+        fn("v").alias("v"), keys=("bucket",) if keyed else (),
+    ).collect()
+    got = {
+        (r.tile_x, r.tile_y, r["bucket"] if keyed else 0, r.v, r.zoom)
+        for r in got
+    }
+    assert got == _fold_levels(rows, z_max, z_min, agg)
+    assert {z for *_, z in got} == set(range(z_min, z_max + 1))
