@@ -20,7 +20,7 @@ of SURVEY §7 step 6's k-ring expand-and-prune):
 4. VERIFY: the true k nearest all lie within the great-circle bbox of
    radius d_k around the query; probe exactly that bbox's cell
    rectangle (coarsened adaptively so the probe list stays bounded)
-   and take the final top-k with a salted two-level window.
+   and take the final top-k with plans/topk.py.
 
 Every driver-side structure is parameter-sized (|queries| x small);
 probe lists are capped by ``probe_limit`` via hierarchical coarsening
@@ -32,10 +32,11 @@ from __future__ import annotations
 import math
 from collections import defaultdict
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from osm_spark.geo import distance, tiles
+from osm_spark.plans.topk import topk
 
 EARTH_R_M = 6_371_000.0  # matches geo/distance.py haversine radius
 
@@ -151,6 +152,23 @@ def _probe_join(pts: DataFrame, probes: list[tuple[int, int, int, int]], zoom: i
     return out
 
 
+def _kth_dist(cand: DataFrame, k: int) -> dict:
+    """qid -> (d_k, m): the k-th smallest haversine distance among a
+    query's probe candidates, and how many (<= k) there are.  Max and
+    count over the k nearest do not depend on how ties break."""
+    scored = cand.select(
+        "qid",
+        distance.haversine_m("qlat", "qlon", "lat", "lon").alias("dist_m"),
+    )
+    rows = (
+        topk(scored, ["qid"], [F.col("dist_m").asc()], k)
+        .groupBy("qid")
+        .agg(F.max("dist_m").alias("dk"), F.count("*").alias("m"))
+        .collect()
+    )
+    return {r["qid"]: (r["dk"], r["m"]) for r in rows}
+
+
 def knn_kring(
     corpus: DataFrame,
     queries: list[tuple[int, float, float]],
@@ -225,19 +243,7 @@ def knn_kring(
         "qid long, qlat double, qlon double",
     )
     cand1 = _probe_join(pts, probes1, zoom).join(F.broadcast(qloc), "qid")
-    scored1 = cand1.select(
-        "qid",
-        distance.haversine_m("qlat", "qlon", "lat", "lon").alias("dist_m"),
-    )
-    wk = Window.partitionBy("qid").orderBy(F.col("dist_m").asc())
-    dk_rows = (
-        scored1.withColumn("rk", F.row_number().over(wk))
-        .filter(F.col("rk") <= k)
-        .groupBy("qid")
-        .agg(F.max("dist_m").alias("dk"), F.count("*").alias("m"))
-        .collect()
-    )
-    dks = {row["qid"]: (row["dk"], row["m"]) for row in dk_rows}
+    dks = _kth_dist(cand1, k)
 
     # ---- phase 2: exact bbox probe at radius d_k
     probes2 = []
@@ -256,11 +262,7 @@ def knn_kring(
         F.col(id_col).alias("neighbor"),
         distance.haversine_m("qlat", "qlon", "lat", "lon").alias("dist_m"),
     )
-    from osm_spark.similarity.ann import _salted_topk
-
-    ranked = _salted_topk(
-        scored, k, ["q"], [F.col("dist_m").asc(), F.col("neighbor")]
-    )
+    ranked = topk(scored, ["q"], [F.col("dist_m").asc(), F.col("neighbor")], k)
     return ranked.select(F.col("q").alias("qid"), "rank", "neighbor", "dist_m")
 
 
@@ -425,21 +427,7 @@ def knn_hex(
         "qid long, qlat double, qlon double",
     )
     cand1 = _hex_probe_join(pts, probes1, res).join(F.broadcast(qloc), "qid")
-    wk = Window.partitionBy("qid").orderBy(
-        distance.haversine_m("qlat", "qlon", "lat", "lon").asc()
-    )
-    dk_rows = (
-        cand1.select(
-            "qid",
-            distance.haversine_m("qlat", "qlon", "lat", "lon").alias("dist_m"),
-        )
-        .withColumn("rk", F.row_number().over(Window.partitionBy("qid").orderBy(F.col("dist_m").asc())))
-        .filter(F.col("rk") <= k)
-        .groupBy("qid")
-        .agg(F.max("dist_m").alias("dk"), F.count("*").alias("m"))
-        .collect()
-    )
-    dks = {row["qid"]: (row["dk"], row["m"]) for row in dk_rows}
+    dks = _kth_dist(cand1, k)
 
     probes2 = []
     for qid, qlat, qlon in queries:
@@ -474,9 +462,5 @@ def knn_hex(
         F.col(id_col).alias("neighbor"),
         distance.haversine_m("qlat", "qlon", "lat", "lon").alias("dist_m"),
     )
-    from osm_spark.similarity.ann import _salted_topk
-
-    ranked = _salted_topk(
-        scored, k, ["q"], [F.col("dist_m").asc(), F.col("neighbor")]
-    )
+    ranked = topk(scored, ["q"], [F.col("dist_m").asc(), F.col("neighbor")], k)
     return ranked.select(F.col("q").alias("qid"), "rank", "neighbor", "dist_m")

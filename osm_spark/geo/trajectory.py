@@ -24,8 +24,7 @@ Spark-first shapes (both operators):
 - Skew = a single mega-user's events land in one task's sort.  Cap is
   the per-user event count, not the corpus; pathological bot users
   should be pre-filtered (a scan-side WHERE) or range-salted per epoch
-  before the window, same discipline as the salted top-k elsewhere in
-  the engine.
+  before the window.
 """
 
 from __future__ import annotations

@@ -13,9 +13,8 @@ default tile at (0, 0) swallowing null geocodes).
 Scale shape:
 
 - per-key counts: ONE map-side-combinable shuffle (|keys| rows out);
-- top-k: salted two-level row_number — per-salt-bucket prune to k,
-  then a k*salt-row final ranking, so no single reducer ever sorts
-  the full key population (the same shape as text/index.py _topk);
+- top-k: plans/topk.py, a per-partition top-k merged from k rows per
+  partition, so no single reducer ever sorts the full key population;
 - the distribution stats (distinct keys, max, total) are one more
   aggregation over the counts frame, and the count-of-count
   quantiles ride the bounded-histogram trick from text/quantiles.py
@@ -31,6 +30,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from osm_spark.plans.topk import topk
+
 
 def key_counts(df: DataFrame, key_cols: Sequence[str]) -> DataFrame:
     """(key..., n) per distinct key — one partial-aggregated shuffle."""
@@ -43,7 +44,6 @@ def skew_profile(
     df: DataFrame,
     key_cols: Sequence[str],
     k: int = 10,
-    salt: int = 8,
 ) -> DataFrame:
     """Top-k hottest keys + population stats, one row per hot key:
 
@@ -58,29 +58,14 @@ def skew_profile(
                  roughly this over 1000.
     """
     counts = key_counts(df, key_cols)
-    key_id = F.concat_ws("", *[F.col(c).cast("string")
-                                     for c in key_cols])
     order = [F.col("n").desc(), *[F.col(c).asc() for c in key_cols]]
-    salted = counts.withColumn(
-        "_salt", F.pmod(F.xxhash64(key_id), F.lit(salt)).cast("int")
-    )
-    w1 = Window.partitionBy("_salt").orderBy(*order)
-    pruned = (
-        salted.withColumn("_lr", F.row_number().over(w1))
-        .filter(F.col("_lr") <= k)
-        .drop("_lr", "_salt")
-    )
-    w2 = Window.orderBy(*order)
-    top = (
-        pruned.withColumn("rank", F.row_number().over(w2).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    top = topk(counts, [], order, k)
     stats = counts.agg(
         F.count(F.lit(1)).cast("long").alias("n_keys"),
         F.sum("n").cast("long").alias("total"),
     )
     # count-of-counts quantiles over the bounded histogram: |distinct
-    # per-key count values| rows, never |keys|
+    # per-key count values| rows (<= sqrt(2 * total)), never |keys|
     hist = counts.groupBy("n").agg(F.count(F.lit(1)).alias("_f"))
     wcum = (
         Window.orderBy(F.col("n").asc())
@@ -91,18 +76,16 @@ def skew_profile(
             hist.agg(F.sum("_f").alias("_tot"))
         )
     )
-    p50 = cum.where(F.col("_cum") * 100 >= 50 * F.col("_tot")).agg(
-        F.min("n").cast("long").alias("p50_n")
-    )
-    p99 = cum.where(F.col("_cum") * 100 >= 99 * F.col("_tot")).agg(
-        F.min("n").cast("long").alias("p99_n")
-    )
+    pct = cum.agg(*[
+        F.min(F.when(F.col("_cum") * 100 >= q * F.col("_tot"), F.col("n")))
+        .cast("long").alias(f"p{q}_n")
+        for q in (50, 99)
+    ])
     return (
         top.crossJoin(F.broadcast(stats))
-        .crossJoin(F.broadcast(p50))
-        .crossJoin(F.broadcast(p99))
+        .crossJoin(F.broadcast(pct))
         .select(
-            "rank",
+            F.col("rank").cast("long").alias("rank"),
             *key_cols,
             "n",
             F.expr("(n * 1000000) DIV total").cast("long")

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from osm_spark.core import ids
 from osm_spark.geo import tiles
 from osm_spark.pipeline import pages
+from osm_spark.plans.topk import topk
 
 SPARK_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE_SQL: dict[str, str] = {}
@@ -6144,10 +6145,8 @@ def q_frontier_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     scheduling (replication.go's fixed per-origin request budget over an
     ordered stream): each host's top-8 frontier URLs by (priority DESC,
     url) are assigned fetch slots, one fetch per host per slot, slot k
-    starting at (k-1) * crawl-delay(host) seconds.  The Spark side runs
-    the per-host top-B as a SALTED two-level window so a hot host never
-    funnels its whole frontier into one reducer task; the salt never
-    reaches the output, so the oracle is a plain one-window ranking."""
+    starting at (k-1) * crawl-delay(host) seconds.  The per-host top-B
+    is plans/topk.py, the same one-window ranking the oracle runs."""
     from osm_spark.streaming import frontier as _fr
 
     docs = _t(spark, sf_dir, "documents")
@@ -6207,11 +6206,9 @@ def q_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     posting lists (tf in the same pass); the three AND queries
     broadcast as a parameter-sized frame, match via a count filter
     (n_matched == n_terms, exact on the one-row-per-(term,doc)
-    postings), score by summed tf, and rank with the salted two-level
-    top-k window — a stopword query matches most of the corpus, and a
-    plain per-qid window would funnel it into one reducer task.  The
-    oracle recomputes postings, AND semantics and ranking in SQL (its
-    single window is fine at oracle scale)."""
+    postings), score by summed tf, and rank per qid with
+    plans/topk.py.  The oracle recomputes postings, AND semantics and
+    ranking in SQL."""
     from osm_spark.text import index as _ix
 
     docs = _t_spread(spark, sf_dir, "documents")
@@ -6297,10 +6294,9 @@ def q_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     encoded to 4 codes, and the query answered by Asymmetric Distance
     Computation — one parameter-sized (m x k) distance table
     driver-side, each candidate scored by m in-row element_at lookups
-    (no vector math in the scan), ranked by the salted two-level top-k
-    window.  The memory-bounded ANN scale path: at 10^12 vectors the
-    encoded corpus is m bytes/vector and the hot loop is a lookup-sum
-    in codegen.  The oracle replays training, encoding, table build and
+    (no vector math in the scan), ranked by plans/topk.py.  The
+    memory-bounded ANN scale path: at 10^12 vectors the encoded corpus
+    is m bytes/vector and the hot loop is a lookup-sum in codegen.  The oracle replays training, encoding, table build and
     ranking bit-for-bit in SQL."""
     from osm_spark.similarity import pq as _pq
 
@@ -6444,7 +6440,7 @@ def q_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed (the only transcendental), the tf normalization pure IEEE
     rational arithmetic over integer-derived doubles, and each term
     contributing floor(idf_e6 · tfn) so the per-doc sum is
-    order-independent.  Ranking is the salted two-level top-k."""
+    order-independent.  Ranking is plans/topk.py."""
     from osm_spark.text import index as _ix
 
     docs = _t_spread(spark, sf_dir, "documents")
@@ -6526,10 +6522,10 @@ _KMV_VK_POLY = " + ".join(
 def q_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KMV distinct-count sketch (text/sketch.py) — per-source distinct
     page-content cardinality the mergeable-sketch way: each group's 16
-    smallest md5 digests (distinct shuffle + the salted two-level
-    bottom-k window), exact count when the group holds < k values, else
-    the integer-exact estimator (k-1)·(2^60 DIV v_k) over the k-th
-    minimum's 60-bit value.  Every byte is md5-derived, so the oracle
+    smallest md5 digests (distinct shuffle + plans/topk.py bottom-k),
+    exact count when the group holds < k values, else the integer-exact
+    estimator (k-1)·(2^60 DIV v_k) over the k-th minimum's 60-bit
+    value.  Every byte is md5-derived, so the oracle
     reproduces the sketch AND its estimation error bit-for-bit; the
     exact_distinct column (one extra aggregation, skipped at real
     scale) pins the estimator's accuracy under the driver hash."""
@@ -7478,13 +7474,9 @@ def q_tile_topk_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: geocode+tile-assign is in-row column math fused into
     the scan; ONE (tile, term) shuffle with map-side combine reduces
-    pages × tokens to distinct (tile, term) pairs; the top-k window is
-    SALTED two-level (rank within (tile, xxhash64(term) % 16) first,
-    then globally over ≤ 16k survivors) so a hot city tile with a
-    10^8-term vocabulary never funnels one partition — exact for any
-    salt function by the superset argument (a global top-k term has
-    < k better terms globally, hence < k better in its own bucket),
-    which is why the oracle can rank the straightforward way."""
+    pages × tokens to distinct (tile, term) pairs; the per-tile top-k
+    is plans/topk.py, so a hot city tile with a 10^8-term vocabulary
+    ships at most k terms per map partition."""
     docs = _t_spread(spark, sf_dir, "documents")
     terms = docs.select(
         tiles.tile_x(pages.geo_lon(F.col("doc_id")), _TTK_Z).alias("tile_x"),
@@ -7494,25 +7486,9 @@ def q_tile_topk_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf = terms.groupBy("tile_x", "tile_y", "term").agg(
         F.count("*").alias("n")
     )
-    salted = tf.withColumn(
-        "_salt", F.pmod(F.xxhash64("term"), F.lit(16)).cast("int")
-    )
-    w1 = Window.partitionBy("tile_x", "tile_y", "_salt").orderBy(
-        F.col("n").desc(), F.col("term").asc()
-    )
-    pre = (
-        salted.withColumn("_lr", F.row_number().over(w1))
-        .where(F.col("_lr") <= _TTK_K)
-        .drop("_lr", "_salt")
-    )
-    w2 = Window.partitionBy("tile_x", "tile_y").orderBy(
-        F.col("n").desc(), F.col("term").asc()
-    )
-    return (
-        pre.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= _TTK_K)
-        .select("tile_x", "tile_y", F.col("rank").cast("int").alias("rank"),
-                "term", "n")
+    order = [F.col("n").desc(), F.col("term").asc()]
+    return topk(tf, ["tile_x", "tile_y"], order, _TTK_K).select(
+        "tile_x", "tile_y", "rank", "term", "n"
     )
 
 
@@ -8676,9 +8652,9 @@ def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     -ln(u)/w from md5-derived uniforms — deterministic across engines,
     runs and cluster sizes, unlike rand()-based A-ES.  The single ln
     quantizes to e12 BEFORE ranking so a 1-ulp libm divergence cannot
-    reorder candidates (ties break on doc_id); the ranking is the
-    salted two-level top-k.  The oracle replays hash, uniform,
-    priority and ranking bit-for-bit."""
+    reorder candidates (ties break on doc_id); the ranking is
+    plans/topk.py.  The oracle replays hash, uniform, priority and
+    ranking bit-for-bit."""
     from osm_spark.text import webprep as _wpp
 
     docs = _t(spark, sf_dir, "documents").select(
@@ -8879,8 +8855,8 @@ def q_tile_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     holds 5% of all pages in one tile, and rank 1 must say so, with
     skew_x_e3 telling the operator owner what salt factor the cell
     joins need).  Per-key counts are one map-side shuffle; the top-k
-    is the salted two-level ranking so no reducer sorts the key
-    population; count-of-count quantiles ride the bounded histogram.
+    is plans/topk.py so no reducer sorts the key population;
+    count-of-count quantiles ride the bounded histogram.
     The oracle replays counts, ranking (deterministic tie-break),
     shares, and inverted-CDF picks exactly."""
     from osm_spark.plans import skew as _sk
@@ -9984,39 +9960,29 @@ def q_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k word types cover, at k in {5, 10, 20, 40} — the diagnostic
     every tokenizer-vocabulary and stopword-list decision reads first
     (Zipfian corpora saturate fast; the curve's knee sizes the vocab).
-    ONE word-keyed count (vocabulary-sized from then on), one global
-    rank/cumsum window over the distinct-word table — a bounded frame
-    at any corpus size, the same single-partition-window-over-tiny-
-    frame discipline as BPE's merge ranking — and a 4-row k join.
-    Deterministic (freq desc, word asc) total order; integer
-    fixed-point shares; the oracle replays rank, running sum and the
-    per-k max."""
+    ONE word-keyed count (vocabulary-sized from then on), the global
+    top 40 words by plans/topk.py (per-partition top-k, never a
+    single-partition sort of the vocabulary), the covered mass as a
+    sum over the <= 40 survivors joined to the 4-row k table, and the
+    one-row total cross-joined.  Deterministic (freq desc, word asc)
+    total order; integer fixed-point shares; the oracle replays rank,
+    running sum and the per-k max."""
     wf = (
         _t(spark, sf_dir, "documents")
         .select(F.explode(F.split("text", " ")).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).cast("long").alias("freq"))
     )
-    w = Window.orderBy(F.desc("freq"), F.asc("word"))
-    r = wf.select(
-        "word", "freq",
-        F.row_number().over(w).alias("rk"),
-        F.sum("freq").over(
-            w.rowsBetween(Window.unboundedPreceding, 0)
-        ).alias("cum"),
-    ).crossJoin(
-        F.broadcast(wf.agg(F.sum("freq").alias("tot")))
-    )
+    top = topk(wf, [], [F.desc("freq"), F.asc("word")], 40)
+    total = wf.agg(F.sum("freq").cast("long").alias("total"))
     ks = F.broadcast(
         spark.createDataFrame([(5,), (10,), (20,), (40,)], ["k"])
     )
     return (
-        r.join(ks, r["rk"] <= ks["k"])
+        top.join(ks, top["rank"] <= ks["k"])
         .groupBy("k")
-        .agg(
-            F.max("cum").cast("long").alias("covered"),
-            F.max("tot").cast("long").alias("total"),
-        )
+        .agg(F.sum("freq").cast("long").alias("covered"))
+        .crossJoin(F.broadcast(total))
         .select(
             F.col("k").cast("long").alias("k"),
             "covered", "total",

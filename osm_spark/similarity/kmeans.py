@@ -28,6 +28,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from osm_spark.plans import topk as _topk
+
 QUANT = 1000
 
 
@@ -212,9 +214,6 @@ def trained_ivf_topk(
         lambda acc, x: acc + x,
     )
     scored = cand.select("q", F.col("_id").alias("neighbor"), d2.alias("d2"))
-    from osm_spark.similarity.ann import _salted_topk
-
-    ranked = _salted_topk(
-        scored, topk, ["q"], [F.col("d2").asc(), F.col("neighbor")]
-    )
-    return ranked.select("q", F.col("rank").cast("int").alias("rank"), "neighbor")
+    order = [F.col("d2").asc(), F.col("neighbor")]
+    ranked = _topk.topk(scored, ["q"], order, topk)
+    return ranked.select("q", "rank", "neighbor")

@@ -20,9 +20,10 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from osm_spark.plans.topk import topk
 from osm_spark.similarity.kmeans import QUANT, kmeans_quantized
 
 
@@ -87,12 +88,10 @@ def adc_topk(
     dtab: list[list[int]],
     id_col: str = "vec_id",
     k: int = 10,
-    salt: int = 16,
 ) -> DataFrame:
     """-> (id, rank, adc): candidates scored by m in-row table lookups
     (element_at over an m×k literal array — no vector math, no Python),
-    ranked by the (adc ASC, id ASC) total order through the salted
-    two-level top-k window."""
+    ranked by the (adc ASC, id ASC) total order through plans/topk.py."""
     score = None
     for s, row in enumerate(dtab):
         lut = F.array(*[F.lit(int(d)) for d in row])
@@ -100,18 +99,6 @@ def adc_topk(
         score = term if score is None else score + term
     scored = codes.withColumn("adc", score.cast("long")).select(id_col, "adc")
     order = [F.col("adc").asc(), F.col(id_col).asc()]
-    salted = scored.withColumn(
-        "_salt", F.pmod(F.col(id_col), F.lit(salt)).cast("int")
-    )
-    w1 = Window.partitionBy("_salt").orderBy(*order)
-    pruned = (
-        salted.withColumn("_lr", F.row_number().over(w1))
-        .filter(F.col("_lr") <= k)
-        .drop("_lr", "_salt")
-    )
-    w2 = Window.partitionBy().orderBy(*order)
-    return (
-        pruned.withColumn("rank", F.row_number().over(w2).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select(id_col, "rank", "adc")
+    return topk(scored, [], order, k).select(
+        id_col, F.col("rank").cast("long").alias("rank"), "adc"
     )

@@ -13,17 +13,9 @@ is a priority score instead of a sequence number.
 
 Spark-first shape, sized for a 10^12-row frontier:
 
-- **Per-host top-B is a salted two-level window** (same discipline as
-  similarity/ann.py `_salted_topk`): rank within (host, salt-of-url)
-  first, which caps every partition's sort at B rows per (host, salt)
-  bucket, then rank the <= salt*B survivors per host.  A hot host with
-  10^9 frontier URLs never funnels them into one reducer task — the
-  exact failure a naive `row_number() OVER (PARTITION BY host)` hits
-  at scale.  The two-level result is exact (slot = true per-host rank)
-  because level 1 only discards rows that can never reach the top B of
-  their host: every kept row's bucket-local rank bounds its host-global
-  rank from below, and the salt NEVER appears in the output — salting
-  is an execution detail, asserted by the salt-invariance test.
+- **Per-host top-B is plans/topk.py**, which Spark prunes to B rows
+  per host in every map partition before the host shuffle, so a hot
+  host with 10^9 frontier URLs never funnels them into one task.
 - **Slot = per-host rank**: the r-th best URL of each host is fetched
   in slot r, so no host sees two concurrent fetches and every slot is
   maximally parallel across hosts (the frontier's natural parallel
@@ -31,14 +23,15 @@ Spark-first shape, sized for a 10^12-row frontier:
   (robots-style, derived deterministically here): slot k of a host with
   delay d starts at (k-1)*d seconds into the epoch.
 - Everything is built-in window/column expressions — no Python in the
-  path, and the plan is two exchanges (host+salt, then host), both on
-  short string keys.
+  path, and the plan is one exchange, on the short host string.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from osm_spark.plans.topk import topk
 
 
 def schedule(
@@ -47,7 +40,6 @@ def schedule(
     url_col: str = "url",
     prio_col: str = "prio",
     budget: int = 8,
-    salt: int = 16,
 ) -> DataFrame:
     """-> (host, url, prio, slot, fetch_at_s): the epoch's fetch plan.
 
@@ -57,20 +49,10 @@ def schedule(
     delay(host) = 1 + length(host) % 3 stands in for the host's
     robots crawl-delay directive.
     """
-    f = frontier.select(host_col, url_col, prio_col).withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col(url_col)), F.lit(salt)).cast("int")
-    )
     order = [F.col(prio_col).desc(), F.col(url_col).asc()]
-    w1 = Window.partitionBy(host_col, "_salt").orderBy(*order)
-    pruned = (
-        f.withColumn("_lr", F.row_number().over(w1))
-        .filter(F.col("_lr") <= budget)
-        .drop("_lr", "_salt")
-    )
-    w2 = Window.partitionBy(host_col).orderBy(*order)
-    kept = pruned.withColumn(
-        "slot", F.row_number().over(w2).cast("long")
-    ).filter(F.col("slot") <= budget)
+    kept = topk(
+        frontier.select(host_col, url_col, prio_col), [host_col], order, budget
+    ).withColumn("slot", F.col("rank").cast("long"))
     delay = (F.lit(1) + F.pmod(F.length(host_col), F.lit(3))).cast("long")
     return kept.select(
         host_col,

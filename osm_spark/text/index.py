@@ -19,19 +19,17 @@ Spark-first shape, sized for a 10^12-document corpus:
   the postings stream; conjunctive semantics are a (qid, doc) count
   filter (`n_matched == n_terms`, exact because postings hold one row
   per (term, doc)); scoring is the tf sum in the SAME aggregation.
-- **Ranking = salted two-level top-k** (same discipline as
-  similarity/ann.py and streaming/frontier.py): a stopword-heavy query
-  matches a huge fraction of the corpus, and a plain
-  `row_number() OVER (PARTITION BY qid)` would funnel all of it into
-  one reducer task.  Salting is execution-only; ties break by the
+- **Ranking = plans/topk.py** per qid, which Spark prunes to k rows
+  per map partition before the qid shuffle; ties break by the
   (score DESC, doc_id ASC) total order so both engines agree exactly.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from osm_spark.plans.topk import topk
 from osm_spark.text.dedup import words
 
 
@@ -48,31 +46,11 @@ def build_postings(
     )
 
 
-def _topk(
-    hits: DataFrame,
-    id_col: str,
-    score_col: str,
-    k: int,
-    salt: int,
-    descending: bool = True,
-) -> DataFrame:
-    """Salted two-level top-k per qid by (score, id) total order."""
-    s = F.col(score_col)
-    order = [s.desc() if descending else s.asc(), F.col(id_col).asc()]
-    salted = hits.withColumn(
-        "_salt", F.pmod(F.col(id_col), F.lit(salt)).cast("int")
-    )
-    w1 = Window.partitionBy("qid", "_salt").orderBy(*order)
-    pruned = (
-        salted.withColumn("_lr", F.row_number().over(w1))
-        .filter(F.col("_lr") <= k)
-        .drop("_lr", "_salt")
-    )
-    w2 = Window.partitionBy("qid").orderBy(*order)
-    return (
-        pruned.withColumn("rank", F.row_number().over(w2).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("qid", "rank", id_col, score_col)
+def _topk(hits: DataFrame, id_col: str, score_col: str, k: int) -> DataFrame:
+    """Top-k per qid by the (score DESC, id ASC) total order."""
+    order = [F.col(score_col).desc(), F.col(id_col).asc()]
+    return topk(hits, ["qid"], order, k).select(
+        "qid", F.col("rank").cast("long").alias("rank"), id_col, score_col
     )
 
 
@@ -83,7 +61,6 @@ def bm25_search(
     k: int = 10,
     k1: float = 1.2,
     b: float = 0.75,
-    salt: int = 16,
 ) -> DataFrame:
     """Disjunctive (OR) BM25 ranking: -> (qid, rank, doc_id, score_e6).
 
@@ -98,7 +75,7 @@ def bm25_search(
 
     Scale shape: df and dl are rollups of the postings table (one
     table-sized and one corpus-keyed aggregation, both reusable across
-    queries); the query side broadcasts; ranking is the salted top-k.
+    queries); the query side broadcasts; ranking is plans/topk.py.
     """
     spark = postings.sparkSession
     rows = [
@@ -143,7 +120,7 @@ def bm25_search(
         .groupBy("qid", id_col)
         .agg(F.sum("term_e6").cast("long").alias("score_e6"))
     )
-    return _topk(hits, id_col, "score_e6", k, salt, descending=True)
+    return _topk(hits, id_col, "score_e6", k)
 
 
 def search(
@@ -151,7 +128,6 @@ def search(
     queries: list[tuple[int, list[str]]],
     id_col: str = "doc_id",
     k: int = 10,
-    salt: int = 16,
 ) -> DataFrame:
     """Conjunctive search: -> (qid, rank, doc_id, score) with rank
     1..k per query, score = summed tf over the query's terms, AND
@@ -177,22 +153,7 @@ def search(
         )
         .filter(F.col("n_matched") == F.col("n_terms"))
     )
-    order = [F.col("score").desc(), F.col(id_col).asc()]
-    salted = hits.withColumn(
-        "_salt", F.pmod(F.col(id_col), F.lit(salt)).cast("int")
-    )
-    w1 = Window.partitionBy("qid", "_salt").orderBy(*order)
-    pruned = (
-        salted.withColumn("_lr", F.row_number().over(w1))
-        .filter(F.col("_lr") <= k)
-        .drop("_lr", "_salt")
-    )
-    w2 = Window.partitionBy("qid").orderBy(*order)
-    return (
-        pruned.withColumn("rank", F.row_number().over(w2).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("qid", "rank", id_col, "score")
-    )
+    return _topk(hits, id_col, "score", k)
 
 
 # ---------------------------------------------------------- phrase search

@@ -11,12 +11,11 @@ even the estimator error is deterministic and oracle-checked.
 
 Scale shape:
 
-- **distinct + salted bottom-k**: the (group, digest) distinct is one
-  shuffle; the per-group k-minimum ranking is the same salted
-  two-level window as every other top-k in this repo (a hot host with
-  10^9 distinct pages never funnels one reducer task); the sketch
-  itself is k rows per group — mergeable by union + re-rank, which is
-  what makes KMV the right shape for incremental recrawls.
+- **distinct + bottom-k**: the (group, digest) distinct is one
+  shuffle; the per-group k-minimum ranking is plans/topk.py (a hot
+  host with 10^9 distinct pages never funnels one reducer task); the
+  sketch itself is k rows per group — mergeable by union + re-rank,
+  which is what makes KMV the right shape for incremental recrawls.
 - **integer-exact estimator**: digests order identically as strings
   and as numbers (fixed-width lowercase hex); only the k-th minimum is
   parsed to a 60-bit int (15 nibbles — inside signed int64 in every
@@ -27,8 +26,10 @@ Scale shape:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from osm_spark.plans.topk import topk
 
 TWO60 = 1 << 60
 
@@ -43,7 +44,6 @@ def kmv_sketch(
     group_col: str,
     item_col: str,
     k: int = 16,
-    salt: int = 16,
 ) -> DataFrame:
     """-> (group, rank, dig): each group's k smallest distinct md5
     digests of ``item_col``, rank 1..k ascending.  Mergeable: union two
@@ -51,21 +51,11 @@ def kmv_sketch(
     d = items.select(
         F.col(group_col).alias("grp"), F.md5(item_col).alias("dig")
     ).distinct()
-    order = [F.col("dig").asc()]
-    salted = d.withColumn(
-        "_salt", F.pmod(F.xxhash64("dig"), F.lit(salt)).cast("int")
-    )
-    w1 = Window.partitionBy("grp", "_salt").orderBy(*order)
-    pruned = (
-        salted.withColumn("_lr", F.row_number().over(w1))
-        .filter(F.col("_lr") <= k)
-        .drop("_lr", "_salt")
-    )
-    w2 = Window.partitionBy("grp").orderBy(*order)
-    return (
-        pruned.withColumn("rank", F.row_number().over(w2).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select(F.col("grp").alias(group_col), "rank", "dig")
+    ranked = topk(d, ["grp"], [F.col("dig").asc()], k)
+    return ranked.select(
+        F.col("grp").alias(group_col),
+        F.col("rank").cast("long").alias("rank"),
+        "dig",
     )
 
 

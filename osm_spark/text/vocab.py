@@ -27,8 +27,10 @@ training corpus-size-independent per iteration:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from osm_spark.plans.topk import topk
 
 
 def word_freq(docs: DataFrame, text_col: str) -> DataFrame:
@@ -57,11 +59,8 @@ def pair_counts(wf: DataFrame) -> DataFrame:
 def top_merges(pc: DataFrame, k: int = 20) -> DataFrame:
     """Top-k merge candidates, deterministically ranked (count desc,
     pair asc — the tie rule makes both engines pick identical ranks)."""
-    w = Window.orderBy(F.desc("n"), F.asc("pair"))
-    return (
-        pc.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
-        .select("rank", "pair", "n")
+    return topk(pc, [], [F.desc("n"), F.asc("pair")], k).select(
+        "rank", "pair", "n"
     )
 
 

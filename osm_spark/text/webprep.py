@@ -39,6 +39,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from osm_spark.plans.topk import topk
+
 from osm_spark.text.dedup import shingles, words
 
 
@@ -320,12 +322,9 @@ def top_terms(tf: DataFrame, id_col: str, k: int = 3) -> DataFrame:
     shuffles on doc_id only."""
     df_ = tf.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("df"))
     j = tf.join(F.broadcast(df_), "term")
-    w = Window.partitionBy(id_col).orderBy(
-        F.col("tf").desc(), F.col("df").asc(), F.col("term").asc()
-    )
+    order = [F.col("tf").desc(), F.col("df").asc(), F.col("term").asc()]
     return (
-        j.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        topk(j, [id_col], order, k)
         .select(
             F.col(id_col),
             F.col("rank").cast("int").alias("rank"),
@@ -427,27 +426,16 @@ def es_priority_q(key, weight, salt: str = "w") -> Column:
 
 
 def weighted_sample(docs: DataFrame, id_col: str, stratum_col: str,
-                    weight_col: str, k: int, salt_buckets: int = 8) -> DataFrame:
+                    weight_col: str, k: int) -> DataFrame:
     """Top-k weighted sample per stratum: rank by (priority_q, id) and
     keep the k smallest — heavier rows exponentially more likely, the
-    exact ES scheme a quality-weighted corpus mix uses.  Salted
-    two-level ranking like every top-k in this repo (a mega-stratum
-    never funnels one reducer); adds ``rank`` 1..k per stratum."""
+    exact ES scheme a quality-weighted corpus mix uses.  Ranked by
+    plans/topk.py (a mega-stratum never funnels one reducer); adds
+    ``rank`` 1..k per stratum."""
     p = docs.withColumn("_pq", es_priority_q(id_col, weight_col))
     order = [F.col("_pq").asc(), F.col(id_col).asc()]
-    salted = p.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt_buckets)).cast("int")
-    )
-    w1 = Window.partitionBy(stratum_col, "_salt").orderBy(*order)
-    pruned = (
-        salted.withColumn("_lr", F.row_number().over(w1))
-        .filter(F.col("_lr") <= k)
-        .drop("_lr", "_salt")
-    )
-    w2 = Window.partitionBy(stratum_col).orderBy(*order)
-    return (
-        pruned.withColumn("rank", F.row_number().over(w2).cast("long"))
-        .filter(F.col("rank") <= k)
+    return topk(p, [stratum_col], order, k).withColumn(
+        "rank", F.col("rank").cast("long")
     )
 
 

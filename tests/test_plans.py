@@ -413,3 +413,61 @@ def test_round5_session4_late_plan_shapes(spark):
     mg = _plan(spark, "media_gif")
     assert 1 <= _count(mg, "ArrowEvalPython") <= 2
     assert "BatchEvalPython" not in mg
+
+
+_RANKED = (
+    "index_search", "bm25_search", "frontier_schedule", "kmv_distinct",
+    "weighted_sample", "tile_topk_terms", "pq_topk", "tile_skew_profile",
+    "vocab_coverage", "bpe_pair_counts",
+)
+
+
+def _nodes(plan: str) -> list[tuple[int, str]]:
+    """(tree depth, node text) for each line of a plan tree string."""
+    out = []
+    for line in plan.splitlines():
+        m = re.match(r"((?:   |:  )*)[+:]- (.*)", line)
+        out.append((len(m.group(1)) // 3 + 1, m.group(2)) if m else (0, line))
+    return out
+
+
+def _first_child_chain(nodes, i: int) -> list[str]:
+    """Node texts walking down first children from ``nodes[i]``."""
+    chain, d = [], nodes[i][0]
+    for depth, text in nodes[i + 1:]:
+        if depth != d + 1:
+            break
+        chain.append(text)
+        d = depth
+    return chain
+
+
+@pytest.mark.parametrize("name", _RANKED)
+def test_rankings_prune_per_partition(spark, name):
+    """Every ranking is one plans/topk.py window that Spark prunes per
+    input partition: keyed, WindowGroupLimit Partial below the key's
+    hash exchange; global, TakeOrderedAndProject.  No window sorts its
+    whole input in one task behind an Exchange SinglePartition."""
+    nodes = _nodes(_plan(spark, name))
+    windows = [i for i, (_, t) in enumerate(nodes) if t.startswith("Window [")]
+    ranks = [i for i in windows if "row_number()" in nodes[i][1]]
+    assert len(ranks) == 1, name  # each query ranks once
+    for i in windows:
+        feed = next(t for t in _first_child_chain(nodes, i)
+                    if not t.startswith(("Sort ", "WindowGroupLimit ")))
+        if name == "tile_skew_profile" and "sum(_f" in nodes[i][1]:
+            # the count-of-counts running sum: its input is the histogram
+            # of distinct per-key counts, <= sqrt(2 * total) rows
+            continue
+        assert not feed.startswith("Exchange SinglePartition"), (name, feed)
+    text = nodes[ranks[0]][1]
+    first_spec = re.search(r"windowspecdefinition\(([^,]*)", text).group(1)
+    chain = _first_child_chain(nodes, ranks[0])
+    if re.search(r" (ASC|DESC) ", first_spec):  # no PARTITION BY
+        assert chain[0].startswith("TakeOrderedAndProject"), (name, chain[0])
+    else:
+        ex = next(j for j, t in enumerate(chain) if t.startswith("Exchange"))
+        assert chain[ex].startswith("Exchange hashpartitioning"), name
+        below = [t for t in chain[ex + 1:ex + 3]
+                 if t.startswith("WindowGroupLimit")]
+        assert below and below[0].endswith("Partial"), (name, chain)

@@ -58,14 +58,17 @@ def test_adc_topk_orders_by_lookup_sum_then_id(spark):
 
 
 def test_adc_tie_breaks_by_vec_id_and_salt_invisible(spark):
+    """Ties break on vec_id, whatever the partitioning of the codes."""
     codes = spark.createDataFrame(
         [(i, i % 2, 0) for i in range(30)], "vec_id long, code0 int, code1 int"
     )
     dtab = [[5, 5], [0, 0]]  # every vector scores 5 -> pure id order
-    a = [(r.rank, r.vec_id) for r in sorted(
-        pq.adc_topk(codes, dtab, k=6, salt=1).collect(), key=lambda r: r.rank)]
-    b = [(r.rank, r.vec_id) for r in sorted(
-        pq.adc_topk(codes, dtab, k=6, salt=64).collect(), key=lambda r: r.rank)]
+    a, b = (
+        [(r.rank, r.vec_id) for r in sorted(
+            pq.adc_topk(codes.repartition(n), dtab, k=6).collect(),
+            key=lambda r: r.rank)]
+        for n in (1, 64)
+    )
     assert a == b == [(i + 1, i) for i in range(6)]
 
 

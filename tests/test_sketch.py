@@ -48,9 +48,12 @@ def test_estimator_formula_matches_python(spark):
 
 
 def test_salt_invisible_and_groups_independent(spark):
+    """The sketch does not depend on how the items are partitioned."""
     rows = [(f"g{i % 3}", f"t{i}") for i in range(60)]
-    a = {(r.grp, r.rank, r.dig) for r in
-         sk.kmv_sketch(_items(spark, rows), "grp", "item", k=5, salt=1).collect()}
-    b = {(r.grp, r.rank, r.dig) for r in
-         sk.kmv_sketch(_items(spark, rows), "grp", "item", k=5, salt=64).collect()}
+    items = _items(spark, rows)
+    a, b = (
+        {(r.grp, r.rank, r.dig) for r in
+         sk.kmv_sketch(items.repartition(n), "grp", "item", k=5).collect()}
+        for n in (1, 64)
+    )
     assert a == b and len(a) == 15

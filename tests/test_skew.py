@@ -20,14 +20,14 @@ def test_skew_profile_finds_hot_key(spark):
 
 
 def test_salted_prune_never_loses_a_true_top_key(spark):
-    # 50 keys all with count 1 except three hot ones; whatever salt
-    # buckets they land in, the two-level prune must surface them
+    # 50 keys all with count 1 except three hot ones; whichever input
+    # partitions they land in, the per-partition prune must surface them
     rows = (
         [(i,) for i in range(50)]
         + [(1001,)] * 5 + [(1002,)] * 4 + [(1003,)] * 3
     )
     df = spark.createDataFrame(rows, "k long")
-    out = SK.skew_profile(df, ["k"], k=3, salt=4).orderBy("rank").collect()
+    out = SK.skew_profile(df, ["k"], k=3).orderBy("rank").collect()
     assert [(r.k, r.n) for r in out] == [(1001, 5), (1002, 4), (1003, 3)]
 
 

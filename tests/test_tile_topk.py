@@ -6,41 +6,18 @@ import sys
 
 sys.path.insert(0, "/root/repo")
 
-import pytest
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from osm_spark.plans.topk import topk
 
-def _direct_topk(tf, k):
-    w = Window.partitionBy("tile_x", "tile_y").orderBy(
-        F.col("n").desc(), F.col("term").asc()
-    )
-    return (
-        tf.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
-
-
-def _salted_topk(tf, k, salt=16):
-    w1 = Window.partitionBy("tile_x", "tile_y", "_salt").orderBy(
-        F.col("n").desc(), F.col("term").asc()
-    )
-    w2 = Window.partitionBy("tile_x", "tile_y").orderBy(
-        F.col("n").desc(), F.col("term").asc()
-    )
-    return (
-        tf.withColumn("_salt", F.pmod(F.xxhash64("term"), F.lit(salt)).cast("int"))
-        .withColumn("_lr", F.row_number().over(w1))
-        .where(F.col("_lr") <= k)
-        .drop("_lr", "_salt")
-        .withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
-    )
+def _tile_topk(tf, k):
+    order = [F.col("n").desc(), F.col("term").asc()]
+    return topk(tf, ["tile_x", "tile_y"], order, k)
 
 
 def test_salted_equals_direct_random(spark):
-    """The superset argument: two-level salted top-k == direct top-k
-    for ANY salt assignment, including adversarial tie pileups."""
+    """The per-partition prune equals a plain per-tile sort for ANY
+    partitioning of the input, including adversarial tie pileups."""
     import random
 
     rng = random.Random(1234)
@@ -51,17 +28,23 @@ def test_salted_equals_direct_random(spark):
             rows.append((t % 5, t // 5, f"w{i:03d}", rng.randint(1, 4)))
     tf = spark.createDataFrame(
         rows, "tile_x long, tile_y long, term string, n long"
-    )
+    ).repartition(16)
+    tiles = {}
+    for x, y, term, n in rows:
+        tiles.setdefault((x, y), []).append((term, n))
     for k in (1, 3, 5):
-        a = {
-            tuple(r) for r in _direct_topk(tf, k)
+        want = {
+            (x, y, rank, term, n)
+            for (x, y), ts in tiles.items()
+            for rank, (term, n) in enumerate(
+                sorted(ts, key=lambda t: (-t[1], t[0]))[:k], start=1
+            )
+        }
+        got = {
+            tuple(r) for r in _tile_topk(tf, k)
             .select("tile_x", "tile_y", "rank", "term", "n").collect()
         }
-        b = {
-            tuple(r) for r in _salted_topk(tf, k)
-            .select("tile_x", "tile_y", "rank", "term", "n").collect()
-        }
-        assert a == b, k
+        assert got == want, k
 
 
 def test_all_ties_deterministic(spark):
@@ -71,7 +54,7 @@ def test_all_ties_deterministic(spark):
         rows, "tile_x long, tile_y long, term string, n long"
     )
     got = (
-        _salted_topk(tf, 5)
+        _tile_topk(tf, 5)
         .orderBy("rank")
         .select("rank", "term")
         .collect()
